@@ -13,6 +13,7 @@ from __future__ import annotations
 
 import numpy as np
 
+from ..functions.vector import py_sq_l2
 from ..metrics import KERNEL_DISTANCE_EVALS
 
 
@@ -95,6 +96,39 @@ def farthest_first(X: np.ndarray, k: int, start: int = 0, metric: str = "euclide
         dist_when.append(float(min_dist[idx]))
         np.minimum(min_dist, dist_to_point(X, X[idx], metric), out=min_dist)
     return np.array(chosen), np.array(dist_when), min_dist
+
+
+def farthest_first_exact(X: list, k: int) -> tuple[list[int], list[float]]:
+    """Farthest-first traversal with fold-exact squared distances
+    (``functions.vector.py_sq_l2`` over lists of Python floats), so
+    every pick replays bit-for-bit in Spark and DuckDB — unlike
+    ``farthest_first``, whose numpy distances are not fold-exact.
+    Seed = index 0; each next pick is the argmax of the squared
+    distance to the chosen set (strict >, so ties keep the LOWEST
+    index — the same pick as ORDER BY md DESC, pos ASC). Returns
+    (chosen indices, squared distance of each pick when chosen)."""
+    n = len(X)
+    k = min(k, n)
+    if k == 0:
+        return [], []
+    chosen = [0]
+    in_chosen = {0}
+    d2_when = [0.0]
+    md = [py_sq_l2(x, X[0]) for x in X]
+    for _ in range(1, k):
+        best, bi = -1.0, -1
+        for i in range(n):
+            if i not in in_chosen and md[i] > best:
+                best, bi = md[i], i
+        chosen.append(bi)
+        in_chosen.add(bi)
+        d2_when.append(best)
+        cx = X[bi]
+        for i in range(n):
+            d = py_sq_l2(X[i], cx)
+            if d < md[i]:
+                md[i] = d
+    return chosen, d2_when
 
 
 def assign_to_centers(X: np.ndarray, centers_idx: np.ndarray) -> np.ndarray:

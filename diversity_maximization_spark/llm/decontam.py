@@ -26,7 +26,6 @@ maximal-marginal-relevance (MMR) subset selection.
 
 from __future__ import annotations
 
-import math
 import os
 
 import numpy as np
@@ -166,31 +165,6 @@ _MMR_K = 10
 _MMR_LAMBDA = 0.5
 
 
-def _cos_to_lit(vec_col: str, vec) -> F.Column:
-    lit_arr = V.lit_double_array(vec)
-    dot = F.aggregate(
-        F.zip_with(F.col(vec_col), lit_arr, lambda x, y: x.cast("double") * y),
-        F.lit(0.0),
-        lambda s, v: s + v,
-    )
-    qn = sum(float(x) * float(x) for x in vec) ** 0.5
-    return dot / (F.sqrt(V.sq_norm(vec_col)) * F.lit(qn))
-
-
-def _cos_local(x_vec, y_vec, y_norm: float) -> float:
-    """Sequential-fold cosine — EXACTLY the IEEE operation order of
-    ``_cos_to_lit`` (dot and sq_norm as left folds, then
-    ``dot / (sqrt(sqn) * y_norm)``), so locally refined max_sim is
-    bit-identical to the JVM column."""
-    s = 0.0
-    for x, y in zip(x_vec, y_vec):
-        s = s + float(x) * float(y)
-    sq = 0.0
-    for x in x_vec:
-        sq = sq + float(x) * float(x)
-    return s / (math.sqrt(sq) * y_norm)
-
-
 def mmr_select(
     spark: SparkSession,
     sf_dir: str,
@@ -228,7 +202,7 @@ def mmr_over(
     tied from outside (strictness protects the min-id tie-break).
     The first pick of each round needs no threshold test — before
     any in-batch refinement the sort order is the global one. Local
-    refinement uses ``_cos_local`` (bit-identical fold), so picks
+    refinement uses ``V.py_cosine_sim`` (the column's fold), so picks
     and reported scores equal the one-job-per-pick formulation —
     A/B-checked in tests/test_llm.py with batch=1. k=10 now takes
     1-2 jobs instead of 10."""
@@ -252,7 +226,7 @@ def mmr_over(
     state = e.select(
         "vec_id",
         "embedding",
-        _cos_to_lit("embedding", qvec).alias("rel"),
+        V.cosine_sim_to("embedding", qvec).alias("rel"),
         F.lit(-1.0).alias("max_sim"),
     ).cache()
     m = batch if batch is not None else max(64, 8 * k)
@@ -275,7 +249,7 @@ def mmr_over(
             [r["vec_id"], float(r["rel"]), float(r["max_sim"]), list(r["embedding"])]
             for r in rows
         ]
-        new_picked = []  # (vec, qn) applied back to the DataFrame state
+        new_picked = []  # vectors applied back to the DataFrame state
         while len(picks) < k and cand:
             j = max(
                 range(len(cand)),
@@ -287,16 +261,15 @@ def mmr_over(
                 break  # an uncollected point could beat or tie this pick
             picks.append((len(picks), cid, crel, sc))
             del cand[j]
-            qn = sum(float(x) * float(x) for x in cvec) ** 0.5
-            new_picked.append((cvec, qn))
+            new_picked.append(cvec)
             for c in cand:
-                cos = _cos_local(c[3], cvec, qn)
+                cos = V.py_cosine_sim(c[3], cvec)
                 if cos > c[2]:
                     c[2] = cos
         if len(picks) < k and new_picked:
             col = F.col("max_sim")
-            for vec, _ in new_picked:
-                col = F.greatest(col, _cos_to_lit("embedding", vec))
+            for vec in new_picked:
+                col = F.greatest(col, V.cosine_sim_to("embedding", vec))
             nxt = state.withColumn("max_sim", col).cache()
             if prev is not None:
                 prev.unpersist()
@@ -311,14 +284,11 @@ def _mmr_oracle(k: int = _MMR_K) -> str:
     """Unrolled greedy MMR in DuckDB, mirroring ``mmr_over`` IEEE op
     for op: the query vector from exact integer micro-unit sums with
     the same `(s / 1e6) / c` division order; rel and every pairwise
-    cosine as `dot / (sqrt(sqn) * qn)` left folds (list_sum is a
-    sequential fold, bit-matching Spark's aggregate(); CPython's
-    `** 0.5` and sqrt() are both correctly rounded, so qn matches);
+    cosine through the shared cosine fold (functions/vector.py);
     score = 0.5*rel - 0.5*max_sim with exact 0.5 literals. Each round
     picks argmax (score DESC, vec_id ASC) and drops the picked row,
     exactly the engine's excluded-ids discipline. MATERIALIZED stops
     the per-round chain from inlining exponentially."""
-    sq = "list_transform({v}, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))"
     head = f"""
 WITH e AS MATERIALIZED (SELECT vec_id, embedding FROM embeddings),
 dims AS (SELECT unnest(generate_series(1, (SELECT max(len(embedding)) FROM e))) AS i),
@@ -328,29 +298,23 @@ q AS MATERIALIZED (
          COUNT(*) AS c
   FROM e CROSS JOIN dims GROUP BY i),
 qv AS (SELECT list((s / 1000000.0) / c ORDER BY pos) AS v FROM q),
-qn AS (SELECT sqrt(list_sum({sq.format(v='v')})) AS n FROM qv),
 s0 AS MATERIALIZED (
   SELECT e.vec_id, e.embedding,
-         list_sum(list_transform(generate_series(1, len(e.embedding)),
-           i -> CAST(e.embedding[i] AS DOUBLE) * qv.v[i]))
-           / (sqrt(list_sum({sq.format(v='e.embedding')})) * qn.n) AS rel,
+         {V.duck_cosine_sim('e.embedding', 'qv.v')} AS rel,
          CAST(-1.0 AS DOUBLE) AS max_sim
-  FROM e CROSS JOIN qv CROSS JOIN qn)"""
+  FROM e CROSS JOIN qv)"""
     parts = [head]
     for r in range(1, k + 1):
         parts.append(f"""
 , p{r} AS MATERIALIZED (
-  SELECT vec_id, embedding, rel, 0.5 * rel - 0.5 * max_sim AS mmr_score,
-         sqrt(list_sum({sq.format(v='embedding')})) AS pn
+  SELECT vec_id, embedding, rel, 0.5 * rel - 0.5 * max_sim AS mmr_score
   FROM s{r - 1} ORDER BY 0.5 * rel - 0.5 * max_sim DESC, vec_id ASC LIMIT 1)""")
         if r < k:
             parts.append(f"""
 , s{r} AS MATERIALIZED (
   SELECT s.vec_id, s.embedding, s.rel,
          greatest(s.max_sim,
-           list_sum(list_transform(generate_series(1, len(s.embedding)),
-             i -> CAST(s.embedding[i] AS DOUBLE) * CAST(p.embedding[i] AS DOUBLE)))
-           / (sqrt(list_sum({sq.format(v='s.embedding')})) * p.pn)) AS max_sim
+           {V.duck_cosine_sim('s.embedding', 'p.embedding')}) AS max_sim
   FROM s{r - 1} s CROSS JOIN p{r} p WHERE s.vec_id <> p.vec_id)""")
     sel = " UNION ALL ".join(
         f"SELECT CAST({r - 1} AS INTEGER) AS sel_order, vec_id, rel, mmr_score FROM p{r}"
@@ -618,17 +582,13 @@ _FL_SCALE = 10**9
 
 
 def _facility_location_oracle(k: int = _FL_K) -> str:
-    sq = "list_sum(list_transform({v}, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))"
     head = f"""
 WITH e AS MATERIALIZED (
-  SELECT vec_id, embedding, sqrt({sq.format(v='embedding')}) AS nrm
+  SELECT vec_id, embedding, sqrt({V.duck_sq_norm('embedding')}) AS nrm
   FROM embeddings),
 pd AS MATERIALIZED (
   SELECT a.vec_id AS v, b.vec_id AS c,
-         CAST(round(
-           list_sum(list_transform(generate_series(1, len(a.embedding)),
-             i -> CAST(a.embedding[i] AS DOUBLE)
-                  * CAST(b.embedding[i] AS DOUBLE)))
+         CAST(round({V.duck_dot('a.embedding', 'b.embedding')}
            / (a.nrm * b.nrm) * {_FL_SCALE}) AS BIGINT) AS s
   FROM e a CROSS JOIN e b),
 s0 AS MATERIALIZED (SELECT vec_id AS v, CAST(0 AS BIGINT) AS cur FROM e),
@@ -704,12 +664,27 @@ def facility_location_over(
     for the scale argument). Refuses inputs above ``max_points``
     (one column-pruned count up front): the n^2 pair table is only
     sound on a coreset — reduce larger corpora with div_coreset_mr
-    first."""
+    first.
+
+    Degenerate inputs give the same answer on both tiers: ids must be
+    unique (the same count raises ``ValueError`` otherwise); k is
+    clamped to the number of points; a zero-norm vector's
+    similarities are NULL and cover nothing (greatest() skips them).
+    """
     spark = df.sparkSession
     e = df.select(
         F.col(id_col).alias("vec_id"), F.col(vec_col).alias("embedding")
     )
-    n = e.count()
+    cnt = e.agg(
+        F.count(F.lit(1)).alias("n"), F.countDistinct("vec_id").alias("ids")
+    ).first()
+    n = cnt["n"]
+    if cnt["ids"] != n:
+        raise ValueError(
+            f"facility_location: {id_col} must be unique and non-NULL; "
+            f"{n - cnt['ids']} of {n} input rows repeat an id or have none."
+        )
+    k = min(k, n)
     if n > max_points:
         raise ValueError(
             f"facility_location: {n} input points exceed the "
@@ -717,11 +692,10 @@ def facility_location_over(
             "candidates with a coreset first (div_coreset_mr / "
             "api.coreset) and run facility location over the coreset."
         )
-    sqf = "aggregate(transform({v}, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), CAST(0.0 AS DOUBLE), (a, x) -> a + x)"
     en = e.select(
         "vec_id",
         "embedding",
-        F.expr(f"sqrt({sqf.format(v='embedding')})").alias("nrm"),
+        F.sqrt(V.sq_norm("embedding")).alias("nrm"),
     )
     a = en.select(
         F.col("vec_id").alias("v"),
@@ -733,15 +707,12 @@ def facility_location_over(
         F.col("embedding").alias("cv"),
         F.col("nrm").alias("cn"),
     )
-    dot = (
-        "aggregate(zip_with(av, cv, (x, y) -> CAST(x AS DOUBLE)"
-        " * CAST(y AS DOUBLE)), CAST(0.0 AS DOUBLE), (acc, x) -> acc + x)"
-    )
     pairs = a.crossJoin(F.broadcast(b)).select(
         "v",
         "c",
         F.expr(
-            f"CAST(round({dot} / (an * cn) * {_FL_SCALE}) AS BIGINT)"
+            f"CAST(round(try_divide({V.dot_sql('av', 'cv')}, an * cn)"
+            f" * {_FL_SCALE}) AS BIGINT)"
         ).alias("s"),
     )
 
@@ -767,8 +738,11 @@ def facility_location_over(
         c_ids = np.sort(pdf["c"].unique())
         vi = np.searchsorted(v_ids, pdf["v"].to_numpy())
         ci = np.searchsorted(c_ids, pdf["c"].to_numpy())
+        # a NULL similarity (zero-norm vector) stays 0: coverage is
+        # never negative, so max(0, cur) == greatest(NULL, cur) == cur
+        ok = pdf["s"].notna().to_numpy()
         S = np.zeros((len(v_ids), len(c_ids)), dtype=np.int64)
-        S[vi, ci] = pdf["s"].to_numpy(dtype=np.int64)
+        S[vi[ok], ci[ok]] = pdf["s"].to_numpy()[ok].astype(np.int64)
         cur = np.zeros(len(v_ids), dtype=np.int64)
         alive = np.ones(len(c_ids), dtype=bool)
         out = []

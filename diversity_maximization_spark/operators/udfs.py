@@ -27,17 +27,8 @@ from ..sources import load
 
 @pandas_udf(ArrayType(DoubleType()))
 def _normalize_udf(vecs: pd.Series) -> pd.Series:
-    """L2-normalize, element math in float64 matching the SQL mirror."""
-    def norm_one(v):
-        arr = np.asarray(v, dtype=np.float64)
-        # sequential-order sum (math.fsum not needed: mirror aggregate())
-        ss = 0.0
-        for x in arr:
-            ss += x * x
-        n = math.sqrt(ss)
-        return [float(x) / n for x in arr]
-
-    return vecs.map(norm_one)
+    """L2-normalize with the Python form of the SQL mirror's fold."""
+    return vecs.map(lambda v: V.py_l2_normalize(V.py_double_array(v)))
 
 
 @query(

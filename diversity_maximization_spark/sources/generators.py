@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions import vector as V
 from ..registry import query
 
 N_POINTS = 1_000
@@ -58,13 +59,7 @@ def random_sphere(
 ) -> DataFrame:
     """Uniform on the unit sphere: normalized gaussian vector."""
     g = random_gaussian(spark, n, dim, seed)
-    norm = (
-        "sqrt(aggregate(transform(embedding, x -> x * x), "
-        "CAST(0 AS DOUBLE), (s, v) -> s + v))"
-    )
-    return g.select(
-        "vec_id", F.expr(f"transform(embedding, x -> x / {norm})").alias("embedding")
-    )
+    return g.select("vec_id", V.l2_normalize("embedding").alias("embedding"))
 
 
 def random_ball(
@@ -102,7 +97,7 @@ def _points_oracle(n: int = N_POINTS, dim: int = DIM, seed: int = SEED) -> str:
     u1 = u01(f"id, j, 'u1', {seed}")
     u2 = u01(f"id, j, 'u2', {seed}")
     ub = u01(f"id, {seed + 1}")
-    norm = "sqrt(list_sum(list_transform({e}, x -> x * x)))"
+    norm = f"sqrt({V.duck_sq_norm('emb')})"
     return f"""
 WITH ids AS (SELECT unnest(generate_series(0, {n - 1})) AS id),
 g AS MATERIALIZED (
@@ -110,18 +105,18 @@ g AS MATERIALIZED (
     j -> sqrt(-2.0 * ln({u1})) * cos(2.0 * pi() * {u2})) AS emb
   FROM ids),
 s AS MATERIALIZED (
-  SELECT id, list_transform(emb, x -> x / {norm.format(e='emb')}) AS emb
+  SELECT id, {V.duck_l2_normalize('emb')} AS emb
   FROM g),
 b AS MATERIALIZED (
   SELECT id,
          list_transform(emb, x -> x * power({ub}, 1.0 / {dim})) AS emb
   FROM s)
 SELECT 'gaussian' AS family, id AS vec_id,
-       round({norm.format(e='emb')}, 6) AS norm, round(emb[1], 6) AS x0 FROM g
+       round({norm}, 6) AS norm, round(emb[1], 6) AS x0 FROM g
 UNION ALL
-SELECT 'sphere', id, round({norm.format(e='emb')}, 6), round(emb[1], 6) FROM s
+SELECT 'sphere', id, round({norm}, 6), round(emb[1], 6) FROM s
 UNION ALL
-SELECT 'ball', id, round({norm.format(e='emb')}, 6), round(emb[1], 6) FROM b
+SELECT 'ball', id, round({norm}, 6), round(emb[1], 6) FROM b
 """
 
 
@@ -140,13 +135,7 @@ def source_random_points(spark: SparkSession, sf_dir: str) -> DataFrame:
         d = gen(spark).select(
             F.lit(name).alias("family"),
             "vec_id",
-            F.round(
-                F.expr(
-                    "sqrt(aggregate(transform(embedding, x -> x * x), "
-                    "CAST(0 AS DOUBLE), (s, v) -> s + v))"
-                ),
-                6,
-            ).alias("norm"),
+            F.round(F.sqrt(V.sq_norm("embedding")), 6).alias("norm"),
             F.round(F.expr("embedding[0]"), 6).alias("x0"),
         )
         out = d if out is None else out.unionAll(d)

@@ -18,7 +18,6 @@ composability the MapReduce variant exploits.
 from __future__ import annotations
 
 import json
-import math
 import os
 import shutil
 import tempfile
@@ -28,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from ..functions.vector import py_l2_dist
 from ..registry import query
 from ..scratch import scratch_dir
 from ..sources import load
@@ -41,10 +41,6 @@ OUTPUT_SCHEMA = (
 STATE_SCHEMA = "seq int, payload string"
 
 
-def _dist(a, b) -> float:
-    return math.sqrt(sum((x - y) * (x - y) for x, y in zip(a, b)))
-
-
 def fold_point(state: dict, vec_id: int, vec: list, w: int = 1) -> None:
     """Insert one (optionally weighted) point into the (tau, centers)
     summary — the exact per-item update of the streaming algorithm.
@@ -54,7 +50,7 @@ def fold_point(state: dict, vec_id: int, vec: list, w: int = 1) -> None:
     if not centers:
         centers.append([vec_id, vec, w])
         return
-    dists = [_dist(vec, c[1]) for c in centers]
+    dists = [py_l2_dist(vec, c[1]) for c in centers]
     dmin = min(dists)
     if dmin <= state["tau"]:
         centers[min(range(len(dists)), key=lambda i: (dists[i], i))][2] += w
@@ -69,7 +65,7 @@ def fold_point(state: dict, vec_id: int, vec: list, w: int = 1) -> None:
     # floored at the closest pair — data-driven, monotone).
     while len(centers) > KPRIME:
         pair_min = min(
-            _dist(a[1], b[1])
+            py_l2_dist(a[1], b[1])
             for i, a in enumerate(centers)
             for b in centers[i + 1 :]
         )
@@ -77,13 +73,13 @@ def fold_point(state: dict, vec_id: int, vec: list, w: int = 1) -> None:
         kept: list = []
         dropped: list = []
         for c in centers:
-            if all(_dist(c[1], kc[1]) > state["tau"] for kc in kept):
+            if all(py_l2_dist(c[1], kc[1]) > state["tau"] for kc in kept):
                 kept.append(c)
             else:
                 dropped.append(c)
         for c in dropped:
             tgt = min(
-                range(len(kept)), key=lambda i: (_dist(c[1], kept[i][1]), i)
+                range(len(kept)), key=lambda i: (py_l2_dist(c[1], kept[i][1]), i)
             )
             kept[tgt][2] += c[2]
         centers = kept
@@ -559,7 +555,7 @@ def fold_matroid_point(
     if not centers:
         centers.append([vec_id, vec, label, {}])
         return
-    dists = [_dist(vec, c[1]) for c in centers]
+    dists = [py_l2_dist(vec, c[1]) for c in centers]
     dmin = min(dists)
     if dmin <= state["tau"]:
         c = centers[min(range(len(dists)), key=lambda i: (dists[i], i))]
@@ -570,7 +566,7 @@ def fold_matroid_point(
     centers.append([vec_id, vec, label, {}])
     while len(centers) > KPRIME:
         pair_min = min(
-            _dist(a[1], b[1])
+            py_l2_dist(a[1], b[1])
             for i, a in enumerate(centers)
             for b in centers[i + 1 :]
         )
@@ -578,13 +574,13 @@ def fold_matroid_point(
         kept: list = []
         dropped: list = []
         for c in centers:
-            if all(_dist(c[1], kc[1]) > state["tau"] for kc in kept):
+            if all(py_l2_dist(c[1], kc[1]) > state["tau"] for kc in kept):
                 kept.append(c)
             else:
                 dropped.append(c)
         for c in dropped:
             tgt = kept[
-                min(range(len(kept)), key=lambda i: (_dist(c[1], kept[i][1]), i))
+                min(range(len(kept)), key=lambda i: (py_l2_dist(c[1], kept[i][1]), i))
             ]
             # the dropped center itself becomes a delegate of its label
             merged = dict(c[3])

@@ -153,7 +153,7 @@ def write_replay_files_with_flush(
 
 
 def stream_events(
-    spark: SparkSession, replay_dir: str, files_per_trigger: int = 2
+    spark: SparkSession, replay_dir: str, files_per_trigger: int | None = None
 ) -> DataFrame:
     """Watermarks require TIMESTAMP (ltz); session tz is pinned to UTC
     here (runtime-settable conf — the driver constructs its own
@@ -180,13 +180,12 @@ def stream_events(
     per-batch snapshots ARE the declared output.
 
     ``SPARK_GRAFT_REPLAY_FPT`` overrides the DEFAULT only (deployment
-    knob, same pattern as SPARK_GRAFT_STREAM_SHUFFLE); explicit
-    ``files_per_trigger=1`` call sites are semantic and never
-    overridden."""
-    if files_per_trigger != 1:
+    knob, same pattern as SPARK_GRAFT_STREAM_SHUFFLE): it applies when
+    the caller passes no ``files_per_trigger``; an explicit value is
+    never overridden."""
+    if files_per_trigger is None:
         env = os.environ.get("SPARK_GRAFT_REPLAY_FPT")
-        if env:
-            files_per_trigger = max(1, int(env))
+        files_per_trigger = max(1, int(env)) if env else 2
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     return (
         spark.readStream.schema(EVENT_SCHEMA)

@@ -858,3 +858,42 @@ def test_dft_exhaustive_matches_brute_force(spark, sf_dir):
             r["band_e2"],
             r["band_e3"],
         ), r["doc_id"]
+
+
+@pytest.mark.parametrize(
+    "case", ["zero_norm_vector", "k_exceeds_n", "duplicate_ids"]
+)
+def test_facility_location_tiers_agree_on_degenerate_inputs(
+    spark, case, monkeypatch
+):
+    """The numpy local tier and the distributed loop of
+    facility_location_over return the same rows, or raise the same
+    documented error, on each degenerate input."""
+    from diversity_maximization_spark.llm.decontam import facility_location_over
+
+    pts = [(1, [1.0, 0.0]), (2, [0.6, 0.8]), (3, [0.0, 1.0]), (4, [-1.0, 0.2])]
+    k = 3
+    if case == "zero_norm_vector":
+        pts.append((5, [0.0, 0.0]))
+    elif case == "k_exceeds_n":
+        k = 7
+    else:
+        pts.append((2, [0.5, 0.5]))
+    df = spark.createDataFrame(pts, "vec_id bigint, embedding array<double>")
+
+    def run(local_max: str):
+        monkeypatch.setenv("SPARK_GRAFT_FL_LOCAL_MAX", local_max)
+        try:
+            return sorted(tuple(r) for r in facility_location_over(df, k=k).collect())
+        except ValueError as exc:
+            return ("ValueError", str(exc))
+
+    local, distributed = run("4096"), run("0")
+    assert local == distributed
+    if case == "duplicate_ids":
+        assert local[0] == "ValueError" and "unique" in local[1]
+    elif case == "k_exceeds_n":
+        assert [r[0] for r in local] == list(range(len(pts)))
+        assert len({r[1] for r in local}) == len(pts)
+    else:
+        assert len(local) == k

@@ -261,3 +261,33 @@ def test_stream_coreset_center_geometry_golden(spark, sf_dir):
         (290, 28),
     ], got
     assert all(abs(r["tau"] - 1.420371) < 5e-7 for r in rows), rows[0]["tau"]
+
+
+@pytest.mark.parametrize(
+    "env, passed, want", [(None, None, 2), ("5", None, 5), ("5", 2, 2), ("5", 1, 1)]
+)
+def test_replay_fpt_env_overrides_only_the_default(
+    spark, tmp_path, monkeypatch, env, passed, want
+):
+    """SPARK_GRAFT_REPLAY_FPT replaces the default files-per-trigger;
+    a value the caller passes (2 included) is never overridden."""
+    from pyspark.sql.streaming import DataStreamReader
+
+    from diversity_maximization_spark.streaming.replay import stream_events
+
+    seen = []
+    orig = DataStreamReader.option
+
+    def spy(self, key, value):
+        if key == "maxFilesPerTrigger":
+            seen.append(value)
+        return orig(self, key, value)
+
+    monkeypatch.setattr(DataStreamReader, "option", spy)
+    if env is None:
+        monkeypatch.delenv("SPARK_GRAFT_REPLAY_FPT", raising=False)
+    else:
+        monkeypatch.setenv("SPARK_GRAFT_REPLAY_FPT", env)
+    kw = {} if passed is None else {"files_per_trigger": passed}
+    stream_events(spark, str(tmp_path), **kw)
+    assert seen == [want]
